@@ -19,7 +19,7 @@ Plan shape at 100 TB (dim huge, change batch comparatively small):
   changes, a lead-window chains valid_to. Catalyst reuses the same
   exchange for both windows (same partitioning and ordering).
 
-Combined with partition-pruned upsert (``sinks.ParquetUpsertSink``)
+Combined with partition-scoped upsert (``sinks.ParquetUpsertSink``)
 this is the MERGE INTO pattern of a lakehouse table format, expressed
 as pure DataFrame ops.
 

@@ -8,10 +8,11 @@ file on the first bad row (F7), then bulk-casting types (P4/P5).
 Spark-first re-expression: every predicate is a columnar expression
 evaluated in whole-stage codegen; error messages are conditionally-null
 string expressions combined with ``concat_ws``; the file-level
-all-or-nothing gate is a broadcast anti-join against the (tiny)
-distinct set of bad files. ~150k rows/s pandas becomes JVM-vectorized
-and embarrassingly parallel over files/partitions — no Python in the
-hot path at all.
+all-or-nothing gate is a per-file window flag (``max`` of the row flag
+over ``partition by file``), which rides the exchange the per-file
+row-number window already pays for. ~150k rows/s pandas becomes
+JVM-vectorized and embarrassingly parallel over files/partitions — no
+Python in the hot path at all.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_project_spark.config import (
@@ -31,6 +32,7 @@ from data_pipeline_project_spark.config import (
 
 ERROR_COL = "error_reason"
 ROW_COL = "_csv_row"  # CSV line number: header = 1, first data row = 2
+REJECT_COL = "_rejected"  # set by flag_rows: the row goes to quarantine
 
 
 def normalize_na_tokens(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
@@ -150,42 +152,40 @@ def with_error_reason(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     return df.withColumn(ERROR_COL, reason)
 
 
-def split_valid_invalid(
+def flag_rows(
     df: DataFrame,
     rules: Sequence[Rule],
     file_col: str | None = None,
     strict: bool = True,
-    persist: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """F7 — split into (valid, invalid) frames.
+) -> DataFrame:
+    """F7/F8 — attach ``error_reason`` and the boolean ``REJECT_COL``.
 
     strict + file_col: ANY bad row poisons its whole file
-    (pipeline.py:161-165) — valid rows of a poisoned file land in the
-    invalid frame's file set. The distinct bad-file set is tiny by
-    construction (error rate ~20% of files in the reference generator),
-    so it broadcasts; no shuffle of the big side.
+    (pipeline.py:161-165), so the flag is ``max(row is bad)`` over a
+    window partitioned by file. The per-file row-number window of
+    ``read_sensor_csv`` and the stream's batch handler already
+    hash-partitions the frame by file, so this window adds no exchange:
+    the plan keeps one ``Exchange hashpartitioning(file_name)`` and no
+    join.
 
-    lenient (strict=False): row-level split only (the historical
-    `MainPipeline` variant).
-
-    persist=True materializes the flagged frame once: the bad-file set,
-    both splits, and every downstream output (raw/agg/quarantine sinks)
-    otherwise re-run the scan + rule evaluation per consumer. The
-    pipeline writes 3-4 outputs per batch, so this is a ~4x saving;
-    the cache is batch-sized and evicted LRU.
+    lenient (strict=False): the flag is the row's own verdict (the
+    historical `MainPipeline` variant).
     """
     flagged = with_error_reason(df, rules)
-    if persist:
-        from pyspark import StorageLevel
-
-        flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
-    row_bad = F.col(ERROR_COL) != ""
+    rejected = F.col(ERROR_COL) != ""
     if strict and file_col is not None:
-        bad_files = flagged.where(row_bad).select(file_col).distinct()
-        valid = flagged.join(F.broadcast(bad_files), file_col, "left_anti")
-        invalid = flagged.join(F.broadcast(bad_files), file_col, "left_semi")
-        return valid, invalid
-    return flagged.where(~row_bad), flagged.where(row_bad)
+        rejected = F.max(rejected).over(Window.partitionBy(file_col))
+    return flagged.withColumn(REJECT_COL, rejected)
+
+
+def split_valid_invalid(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Split a ``flag_rows`` frame into (valid, invalid): two plain
+    filters on the flag, which is then dropped."""
+    rejected = F.col(REJECT_COL)
+    return (
+        flagged.where(~rejected).drop(REJECT_COL),
+        flagged.where(rejected).drop(REJECT_COL),
+    )
 
 
 def cast_validated(df: DataFrame) -> DataFrame:

@@ -4,7 +4,7 @@ control flow.
 
     read CSVs (all-string, NA tokens, lineage, line numbers)
       → validate F1-F8 (columnar rules)
-      → strict per-file gate (broadcast anti-join) or lenient row split
+      → strict per-file gate (window flag per file) or lenient row split
       → cast valid rows (P4/P5)           → raw table      (K1)
       → long-format aggregates (A1-A8)    → agg table      (K2)
       → invalid rows + per-file reasons   → quarantine     (K5)
@@ -16,8 +16,9 @@ code runs unchanged in ``foreachBatch`` under Structured Streaming.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,6 +29,7 @@ from data_pipeline_project_spark.operators.validation import (
     ROW_COL,
     cast_validated,
     file_error_summary,
+    flag_rows,
     sensor_rules,
     split_valid_invalid,
 )
@@ -41,12 +43,22 @@ from data_pipeline_project_spark.sources.csv_source import (
 @dataclass
 class SensorBatchResult:
     """The three output tables of one pipeline run (reference: the two
-    MySQL tables + the quarantine folder/log)."""
+    MySQL tables + the quarantine folder/log).
+
+    All outputs read one persisted validated frame; ``release`` drops it
+    once they have been written (a long-running stream would otherwise
+    keep one cached plan per micro-batch)."""
 
     raw: DataFrame  # valid typed rows (raw_sensor_data shape)
     aggregates: DataFrame  # long-format stats (aggregated_sensor_data shape)
     quarantined_rows: DataFrame  # all rows of rejected files, with error_reason
     quarantine_log: DataFrame  # one reason line per rejected file (K5)
+    cached: DataFrame  # the persisted validated frame the outputs read
+
+    def release(self) -> None:
+        """Unpersist the validated frame; the outputs stay usable but
+        recompute from the source if read again."""
+        self.cached.unpersist()
 
 
 def run_sensor_batch(
@@ -72,12 +84,7 @@ def run_sensor_batch(
         # recompute — the common zero-bad-files batch skips it entirely
         df = df.where(~F.col(FILE_COL).isin(bad_names))
     result = process_sensor_frame(df, config)
-    return SensorBatchResult(
-        raw=result.raw,
-        aggregates=result.aggregates,
-        quarantined_rows=result.quarantined_rows,
-        quarantine_log=result.quarantine_log.unionByName(bad_log),
-    )
+    return replace(result, quarantine_log=result.quarantine_log.unionByName(bad_log))
 
 
 def process_sensor_frame(
@@ -88,13 +95,17 @@ def process_sensor_frame(
 
     Shared verbatim between the batch entry point and the streaming
     ``foreachBatch`` (SURVEY.md §7 M3 — the cleanest Spark idiom for
-    the reference's whole-file micro-batching).
+    the reference's whole-file micro-batching). Call ``release()`` on
+    the result once its outputs are written.
     """
     config = config or PipelineConfig()
     rules = sensor_rules(config.bounds)
-    valid, invalid = split_valid_invalid(
-        df, rules, file_col=FILE_COL, strict=config.strict, persist=True
+    # persisted once: every output (and K5's log) reads it instead of
+    # re-running the scan, the windows and the rules
+    flagged = flag_rows(df, rules, file_col=FILE_COL, strict=config.strict).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    valid, invalid = split_valid_invalid(flagged)
 
     raw = cast_validated(valid).select(
         "sensor_id", "timestamp", *METRIC_COLUMNS, FILE_COL
@@ -115,6 +126,7 @@ def process_sensor_frame(
         aggregates=aggregates,
         quarantined_rows=quarantined_rows,
         quarantine_log=quarantine_log,
+        cached=flagged,
     )
 
 

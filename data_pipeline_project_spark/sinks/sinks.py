@@ -23,6 +23,7 @@ import time
 from abc import ABC, abstractmethod
 from collections.abc import Callable, Sequence
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -89,19 +90,31 @@ class ParquetUpsertSink(Sink):
     """K2 — upsert keyed on ``keys``: last write wins per key.
 
     Without a transactional table format, upsert-into-parquet is
-    read-merge-overwrite — but scoped to the partitions the batch
-    touches, not the whole table: the table is partitioned by
-    ``partition_by`` (must be a subset of ``keys``, so a key's row can
-    never move between partitions), the merge reads only the affected
-    partitions (partition pruning), and the overwrite uses dynamic
-    partition-overwrite so untouched partitions' files are never
-    rewritten. Per-micro-batch cost is O(affected partitions), not
-    O(table) — for the sensor agg table partitioned by file_name, a
-    batch of k files rewrites k partitions of a table that grows
-    forever. Replaying the same batch is idempotent — the property the
-    reference's unique-key upsert provides (K3/K6). At 100 TB one would
-    point this interface at Delta/Iceberg MERGE INTO instead; the
-    interface is the contract, the format is a deployment choice.
+    read-merge-overwrite, scoped to the partitions the batch touches:
+    the table is partitioned by ``partition_by`` (a subset of ``keys``,
+    so a key's row can never move between partitions) and the
+    overwrite is a dynamic partition overwrite, so untouched
+    partitions' files are never rewritten.
+
+    A write never lists or reads the table as a whole. It persists the
+    batch, collects the batch's distinct partition values, and asks the
+    filesystem which of those partition directories exist (paths built
+    by Spark's own ``getPartitionPathString``, so escaping and NULL
+    partitions match the writer's). When none exist — the stream's
+    normal case, every file is new — the cached batch is written
+    directly. Otherwise only the existing directories are read, with
+    the batch's schema, merged (batch rows replace existing rows with
+    the same key, NULL-safe) and materialised before the overwrite.
+    Per-batch cost is O(batch partitions), not O(table): for the sensor
+    agg table partitioned by file_name, a batch of k files touches k
+    directories of a table that grows forever. Replaying the same batch
+    is idempotent — the property the reference's unique-key upsert
+    provides (K3/K6). At 100 TB one would point this interface at
+    Delta/Iceberg MERGE INTO instead; the interface is the contract,
+    the format is a deployment choice.
+
+    The batch's schema is the table's schema. Errors reading existing
+    partitions propagate: the overwrite never runs on a failed read.
 
     ``partition_by=()`` degenerates to a full-table rewrite — only for
     tiny bounded tables.
@@ -122,45 +135,66 @@ class ParquetUpsertSink(Sink):
                 "must land in the same partition as the row it replaces"
             )
 
-    def _affected_filter(self, df: DataFrame):
-        """Predicate selecting the batch's partitions (pruning pushes it
-        to the directory listing). Driver traffic is one small collect:
-        distinct partition tuples of one micro-batch."""
-        parts = df.select(self.partition_by).distinct().collect()
-        cond = F.lit(False)
+    def _existing_dirs(self, batch: DataFrame) -> list[str]:
+        """Directories of the table that hold rows the batch may
+        replace: the batch's partitions that already exist, or the
+        table root when it is unpartitioned. Driver cost is one small
+        collect and one ``exists`` per batch partition."""
+        spark = batch.sparkSession
+        jvm = spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not self.partition_by:
+            return [self.path] if fs.exists(root) else []
+        # the writer names a directory by the value cast to string
+        # (session time zone), then escapes it
+        parts = batch.select(
+            [F.col(c).cast("string") for c in self.partition_by]
+        ).distinct().collect()
+        catalog_utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        dirs = []
         for p in parts:
-            tup = F.lit(True)
-            for c in self.partition_by:
-                tup = tup & (F.col(c) == F.lit(p[c]))
-            cond = cond | tup
-        return cond
+            rel = "/".join(
+                catalog_utils.getPartitionPathString(c, v)
+                for c, v in zip(self.partition_by, p)
+            )
+            d = jvm.org.apache.hadoop.fs.Path(root, rel)
+            if fs.exists(d):
+                dirs.append(d.toString())
+        return dirs
 
     def write(self, df: DataFrame, epoch_id: int | None = None) -> None:
         spark = df.sparkSession
+        batch = df.persist(StorageLevel.MEMORY_AND_DISK)
+        out = batch
         try:
-            existing = spark.read.parquet(self.path)
-            have_existing = True
-        except Exception:
-            have_existing = False
-        if have_existing:
+            dirs = self._existing_dirs(batch)
+            if dirs:
+                existing = (
+                    spark.read.schema(batch.schema)
+                    .option("basePath", self.path)
+                    .parquet(*dirs)
+                )
+                keys = batch.select(self.keys).distinct()
+                same_key = [existing[k].eqNullSafe(keys[k]) for k in self.keys]
+                # materialise before overwrite: the plan reads the
+                # directories it overwrites
+                out = (
+                    existing.join(keys, same_key, "left_anti")
+                    .unionByName(batch)
+                    .persist(StorageLevel.MEMORY_AND_DISK)
+                )
+                out.count()
+            writer = out.write.mode("overwrite")
             if self.partition_by:
-                existing = existing.where(self._affected_filter(df))
-            merged = existing.join(
-                df.select(self.keys).distinct(), self.keys, "left_anti"
-            ).unionByName(df)
-        else:
-            merged = df
-        # Materialize before overwrite: the plan reads the same path it
-        # overwrites.
-        out = merged.cache()
-        out.count()
-        writer = out.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by).option(
-                "partitionOverwriteMode", "dynamic"
-            )
-        writer.parquet(self.path)
-        out.unpersist()
+                writer = writer.partitionBy(*self.partition_by).option(
+                    "partitionOverwriteMode", "dynamic"
+                )
+            writer.parquet(self.path)
+        finally:
+            if out is not batch:
+                out.unpersist()
+            batch.unpersist()
 
 
 class JdbcAppendSink(Sink):

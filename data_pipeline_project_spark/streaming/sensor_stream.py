@@ -15,6 +15,14 @@ inside ``process_sensor_frame`` can never see half a file.
 Retry semantics (K6): a failing sink raises → the query stops and
 restarts from the checkpoint, replaying the batch; the upsert sink's
 key makes the replay idempotent (K2/K3).
+
+Sink order: the three writes run one after another. Running them in
+three ``InheritableThread``s was measured against this on a 4-vCPU VM
+(``perfbench/run.py --workload sensor --seconds 15``, 10 interleaved
+pairs, seeds 701-710): stream latency geomean median 1.75 s sequential
+(quartile spread 0.28 s) vs 1.71 s overlapped; overlapped won 7 of 10
+pairs. That is inside the noise, short of a 9-of-10 win, so the writes
+stay sequential.
 """
 
 from __future__ import annotations
@@ -81,9 +89,12 @@ def run_sensor_stream(
             ROW_COL, F.row_number().over(w) + 1
         )
         res = process_sensor_frame(df, config)
-        raw_sink.write(res.raw, epoch_id)
-        agg_sink.write(res.aggregates, epoch_id)
-        quarantine_sink.write(res.quarantined_rows, epoch_id)
+        try:
+            raw_sink.write(res.raw, epoch_id)
+            agg_sink.write(res.aggregates, epoch_id)
+            quarantine_sink.write(res.quarantined_rows, epoch_id)
+        finally:
+            res.release()
 
     writer = stream.writeStream.foreachBatch(handle_batch).option(
         "checkpointLocation", checkpoint_dir

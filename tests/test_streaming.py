@@ -198,6 +198,37 @@ def test_upsert_rewrites_only_affected_partitions(spark, tmp_path):
     assert out.count() == 6  # 2 sensors x 3 metrics, no dup keys
 
 
+def test_stream_releases_per_batch_cache(spark, tmp_path):
+    """Each micro-batch persists its validated frame for the three
+    sinks and releases it after writing them: after three one-file
+    batches the session caches no more plans than before the stream."""
+    data = tmp_path / "data"
+    data.mkdir()
+    for i in range(3):
+        _write(data, f"f{i}.csv", [f"2025-05-26 1{i}:00:00,S{i},20.0,0.5,1000.0"])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.numCachedEntries()
+
+    q = run_sensor_stream(
+        spark, str(data),
+        ParquetAppendSink(str(tmp_path / "raw")),
+        ParquetUpsertSink(
+            str(tmp_path / "agg"),
+            keys=["sensor_id", "file_name", "metric_name", "aggregation_time"],
+            partition_by=["file_name"],
+        ),
+        ParquetAppendSink(str(tmp_path / "quar")),
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+        max_files_per_trigger=1,
+    )
+    _run_until_done(q)
+
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 3
+    assert spark.read.parquet(str(tmp_path / "raw")).count() == 3
+    assert cache.numCachedEntries() == cached_before
+
+
 def test_streaming_ewma_stateful(spark, tmp_path):
     """applyInPandasWithState: per-key EWMA state carried across
     micro-batches matches the batch recurrence."""

@@ -67,6 +67,17 @@ def test_strict_gate_quarantines_whole_file(spark, fixture_dir):
     assert qfiles == {"bad_type.csv", "bad_multi.csv", "bad_ts.csv", "bad_null_reading.csv"}
 
 
+def test_strict_gate_shares_the_row_number_exchange(spark, fixture_dir):
+    """The per-file gate is a window flag on the frame the per-file
+    row-number window already partitioned by file: the raw output's
+    plan has one file_name exchange and no broadcast."""
+    res = run_sensor_batch(spark, str(fixture_dir))
+    plan = res.raw._jdf.queryExecution().executedPlan().toString()
+    res.release()
+    assert plan.count("Exchange hashpartitioning(file_name") == 1, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
 def test_error_reason_golden_format(spark, fixture_dir):
     res = run_sensor_batch(spark, str(fixture_dir))
     log = {r.file_name: r.quarantine_reason for r in res.quarantine_log.collect()}
